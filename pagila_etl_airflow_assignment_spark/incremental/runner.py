@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.weekly_summary import weekly_rental_summary
+from ..schemas import WEEKLY_RENTAL_SUMMARY
 from .upsert import merge_upsert, read_parquet_table
 from .watermark import DEFAULT_WATERMARK_START, WatermarkStore
 
@@ -89,11 +90,17 @@ def run_incremental(
     store = WatermarkStore(spark, state_dir)
 
     # --- Step 0: empty-target → reset watermark (I-2) -------------------------
-    target = read_parquet_table(spark, target_dir)
-    watermark_reset = False
-    if target is None or target.isEmpty():
+    # The target's schema is known, so no schema-inference job runs, and one
+    # aggregate answers both "empty?" and the max week step 3b needs.
+    target = read_parquet_table(spark, target_dir, schema=WEEKLY_RENTAL_SUMMARY)
+    n_target, max_tgt_week = 0, None
+    if target is not None:
+        n_target, max_tgt_week = target.agg(
+            F.count(F.lit(1)), F.max("week_beginning")
+        ).first()
+    watermark_reset = n_target == 0
+    if watermark_reset:
         store.write(process_name, DEFAULT_WATERMARK_START)
-        watermark_reset = True
     _maybe_fail("after_reset")
 
     # --- Steps 1-3a fused: ONE source pass (A-2 + I-3 + I-4) ------------------
@@ -137,10 +144,6 @@ def run_incremental(
     backfill: set[dt.date] = set()
     if probe.max_activity is not None:
         max_src_week = _monday(probe.max_activity)
-        max_tgt_row = (
-            target.agg(F.max("week_beginning").alias("m")).first() if target else None
-        )
-        max_tgt_week = max_tgt_row.m if max_tgt_row else None
         start = None
         if max_tgt_week is None and probe.min_activity is not None:
             start = _monday(probe.min_activity)
@@ -153,7 +156,9 @@ def run_incremental(
     # --- Step 3c: combine; early exit (I-6) ----------------------------------
     affected = sorted(changed | backfill)
     if not affected:
-        store.write(process_name, cur_max)
+        # an unchanged watermark is already on disk: rewriting it is pure cost
+        if cur_max != prev_wm:
+            store.write(process_name, cur_max)
         return IncrementalRunReport(
             previous_watermark=prev_wm,
             new_watermark=cur_max,

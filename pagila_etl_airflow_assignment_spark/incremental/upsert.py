@@ -8,11 +8,16 @@ upsert, so we implement the documented fallback (SURVEY.md §7 "What's hard"):
 
 On a real lakehouse deployment this module is the seam where Delta Lake's
 ``MERGE INTO`` (or Iceberg's) slots in — same call signature, true atomic
-commit, no full rewrite. For the summary/watermark tables here the rewrite is
-trivially small (one row per week / per process). For a large partitioned
+commit, no full rewrite. For the summary table here the rewrite is trivially
+small (one row per week); the watermark table does not come through here at
+all, it is driver-committed metadata (watermark.py). For a large partitioned
 target, pass ``partition_by`` and only affected partitions are rewritten
 (dynamic-partition-overwrite shape), which is what scales to 100 TB: the
 rewrite cost is proportional to dirty partitions, not table size.
+
+The row count a merge returns comes from the footers of the files on disk
+after the commit (driver-side metadata reads, no Spark job), never from a
+re-scan of the table.
 """
 
 from __future__ import annotations
@@ -21,6 +26,7 @@ import os
 import shutil
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -81,6 +87,32 @@ def _looks_like_delta(path: str) -> bool:
     return os.path.isdir(os.path.join(path, "_delta_log"))
 
 
+def _hidden(name: str) -> bool:
+    """Spark's listing rule: ``_``/``.``-prefixed names are metadata (e.g.
+    ``_SUCCESS``, ``.crc``, ``_temporary``), except ``_``-named partition
+    directories like ``_k=v``."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def parquet_files(path: str) -> list[str]:
+    """The data files of the parquet table at ``path`` (recursive, sorted;
+    empty when the directory is absent)."""
+    found = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        found.extend(
+            os.path.join(root, f)
+            for f in files
+            if f.endswith(".parquet") and not _hidden(f)
+        )
+    return sorted(found)
+
+
+def footer_row_count(path: str) -> int:
+    """Rows of the parquet table at ``path``, summed from file footers."""
+    return sum(pq.read_metadata(f).num_rows for f in parquet_files(path))
+
+
 def read_parquet_table(
     spark: SparkSession, path: str, schema=None
 ) -> DataFrame | None:
@@ -91,14 +123,7 @@ def read_parquet_table(
     top-level-only check would report such a table absent, and a merge that
     treats the target as absent silently replaces it with just the updates
     (the round-1 ADVICE data-loss finding)."""
-    if not os.path.isdir(path):
-        return None
-    has_parquet = any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(path)
-        for f in files
-    )
-    if not has_parquet:
+    if not parquet_files(path):
         return None
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(path)
@@ -128,14 +153,14 @@ def merge_upsert(
 
     ``order_by``: optional column whose larger value wins within a key
     (defaults to a source-precedence flag — updates beat target).
-    Returns the post-merge row count.
+    Returns the post-merge row count, read from the committed files' footers.
 
     Partitioned targets (``partition_by``) use TRUE dynamic-partition
     overwrite: only partitions present in ``updates`` are read back, merged,
     and rewritten — untouched partitions' files are never touched, so the
     rewrite cost is proportional to dirty partitions, not table size (the
     shape that scales to 100 TB). Unpartitioned targets use the read-merge-
-    atomic-swap fallback (trivially small for the summary/watermark tables).
+    atomic-swap fallback (trivially small for the weekly summary table).
 
     When Delta Lake is on the classpath (feature-detected; not in this
     container), the merge routes through ``DeltaTable.merge`` instead — the
@@ -145,7 +170,9 @@ def merge_upsert(
         _looks_like_delta(target_dir) or not os.path.isdir(target_dir)
     ):
         return _delta_merge(spark, target_dir, updates, key, order_by, partition_by)
-    existing = read_parquet_table(spark, target_dir)
+    # the target holds earlier updates, so their schema is the target's:
+    # passing it skips Spark's schema-inference job over the footers
+    existing = read_parquet_table(spark, target_dir, schema=updates.schema)
     if existing is not None and partition_by:
         # restrict the merge universe to DIRTY partitions only; the distinct
         # partition-value set is small by construction (it is the week list /
@@ -181,10 +208,10 @@ def merge_upsert(
             ).option("partitionOverwriteMode", "dynamic").mode(
                 "overwrite"
             ).parquet(target_dir)
-        return spark.read.parquet(target_dir).count()
+        return footer_row_count(target_dir)
 
     staging = f"{target_dir}.staging-{uuid.uuid4().hex[:8]}"
     merged.coalesce(1).write.mode("overwrite").parquet(staging)
-    n = spark.read.parquet(staging).count()
+    n = footer_row_count(staging)
     _atomic_swap(staging, target_dir)
     return n

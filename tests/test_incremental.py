@@ -11,6 +11,7 @@ reference intended but never automated.
 from __future__ import annotations
 
 import datetime as dt
+import os
 import shutil
 import tempfile
 
@@ -22,6 +23,7 @@ from pagila_etl_airflow_assignment_spark.incremental import (
     WatermarkStore,
     run_incremental,
 )
+from pagila_etl_airflow_assignment_spark.incremental.runner import ETL_PROCESS_NAME
 from pagila_etl_airflow_assignment_spark.incremental.upsert import read_parquet_table
 from pagila_etl_airflow_assignment_spark.plans.weekly_summary import (
     weekly_rental_summary,
@@ -133,6 +135,48 @@ def test_noop_advances_watermark(spark, rental, dirs):
     assert store.read("pagila_weekly_rental_summary") == r1.new_watermark
     r2 = run_incremental(spark, rental, target_dir, state_dir)
     assert r2.noop and r2.new_watermark == r1.new_watermark
+
+
+def _files(*dirs):
+    """Every file under ``dirs`` with its modification time."""
+    return {
+        os.path.join(root, f): os.stat(os.path.join(root, f)).st_mtime_ns
+        for d in dirs
+        for root, _, fs in os.walk(d)
+        for f in fs
+    }
+
+
+def test_noop_on_unchanged_snapshot_writes_nothing(spark, rental, dirs):
+    """(d) at an unchanged watermark: the state and target files stay as
+    they are; a reset run and a run that advances the watermark still
+    write the state."""
+    target_dir, state_dir = dirs
+    base = rental.where(F.col("last_update") <= F.lit(dt.datetime(1996, 1, 1)))
+    r1 = run_incremental(spark, base, target_dir, state_dir)
+    assert r1.watermark_reset and os.listdir(state_dir)
+    store = WatermarkStore(spark, state_dir)
+    assert store.read(ETL_PROCESS_NAME) == r1.new_watermark
+
+    before = _files(target_dir, state_dir)
+    r2 = run_incremental(spark, base, target_dir, state_dir)
+    assert r2.noop and r2.new_watermark == r2.previous_watermark
+    assert _files(target_dir, state_dir) == before
+
+    # reset: an emptied target forces a reload from the 1900 default
+    shutil.rmtree(target_dir)
+    state_before = _files(state_dir)
+    r3 = run_incremental(spark, base, target_dir, state_dir)
+    assert r3.watermark_reset and not r3.noop
+    assert _files(state_dir) != state_before
+
+    # advance: a grown snapshot moves the watermark forward
+    grown = rental.where(F.col("last_update") <= F.lit(dt.datetime(1997, 1, 1)))
+    state_before = _files(state_dir)
+    r4 = run_incremental(spark, grown, target_dir, state_dir)
+    assert r4.new_watermark > r3.new_watermark
+    assert _files(state_dir) != state_before
+    assert store.read(ETL_PROCESS_NAME) == r4.new_watermark
 
 
 def test_crash_between_merge_and_watermark_converges(spark, rental, dirs):
