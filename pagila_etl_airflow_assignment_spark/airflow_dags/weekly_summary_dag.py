@@ -12,20 +12,14 @@ import os
 
 
 def _run(**context) -> None:
-    from pagila_etl_airflow_assignment_spark.incremental import run_incremental
-    from pagila_etl_airflow_assignment_spark.session import build_session
-    from pagila_etl_airflow_assignment_spark.sources.rental import load_rental
+    from pagila_etl_airflow_assignment_spark.jobs.weekly_summary import main
 
-    spark = build_session(app_name="pagila_weekly_summary_etl")
-    source_dir = os.environ.get("PAGILA_SOURCE_DIR", "/data/pagila")
-    target_dir = os.environ.get("PAGILA_TARGET_DIR", "/data/rollup/weekly_rental_summary")
-    state_dir = os.environ.get("PAGILA_STATE_DIR", "/data/rollup/etl_watermarks")
-    rental = load_rental(spark, source_dir)
-    report = run_incremental(spark, rental, target_dir, state_dir)
-    print(
-        f"incremental run: delta_rows={report.delta_rows} "
-        f"weeks_written={report.weeks_written} noop={report.noop} "
-        f"watermark {report.previous_watermark} -> {report.new_watermark}"
+    main(
+        [
+            "--source", os.environ.get("PAGILA_SOURCE_DIR", "/data/pagila"),
+            "--target", os.environ.get("PAGILA_TARGET_DIR", "/data/rollup/weekly_rental_summary"),
+            "--state", os.environ.get("PAGILA_STATE_DIR", "/data/rollup/etl_watermarks"),
+        ]
     )
 
 

@@ -16,7 +16,7 @@ per week re-scanning the source 3x per week. The window-formulation summary is
 O(n + weeks) for ANY number of dirty weeks, so we compute the full summary once
 and semi-join it down to the affected weeks. At 100 TB the recompute is two
 hash aggregations over the fact table — the same cost as one dirty week in the
-reference's scheme — and the MERGE rewrites only affected rows/partitions.
+reference's scheme — and the MERGE rewrites the weeks-sized summary table.
 
 Boundary semantics are ref.sql's date-granularity (SURVEY.md §2.X), so the
 incremental result is bit-identical to the full-recompute oracle — the
@@ -55,38 +55,14 @@ def _monday(d: dt.date) -> dt.date:
 
 
 def run_incremental(
-    spark: SparkSession,
-    rental: DataFrame,
-    target_dir: str,
-    state_dir: str,
-    process_name: str = ETL_PROCESS_NAME,
-    as_of: dt.date | None = None,
-    fail_before_watermark: bool = False,
-    fail_point: str | None = None,
+    spark: SparkSession, rental: DataFrame, target_dir: str, state_dir: str
 ) -> IncrementalRunReport:
     """One incremental run. ``rental`` is the current source snapshot.
 
-    Fault injection for the T2(e) crash-safety property tests: ``fail_point``
-    crashes the run at a named protocol boundary —
-
-    * ``"after_reset"``    — after the empty-target watermark reset (step 0)
-    * ``"after_window"``   — after the time window is read, before any write
-    * ``"before_merge"``   — after the updates are computed, before the MERGE
-    * ``"before_watermark"`` — after the summary MERGE, before the watermark
-      advance (the O-8 ordering certificate; ``fail_before_watermark=True``
-      is the backward-compatible alias)
-
-    The protocol invariant under ANY of these: a rerun on the same (or a
-    further-grown) snapshot converges to the full recompute, because the
+    The protocol invariant under a crash at ANY step: a rerun on the same (or
+    a further-grown) snapshot converges to the full recompute, because the
     watermark only advances after the summary commit and every step before
-    the MERGE is read-only."""
-    if fail_before_watermark:
-        fail_point = "before_watermark"
-
-    def _maybe_fail(point: str) -> None:
-        if fail_point == point:
-            raise RuntimeError(f"injected crash at {point}")
-
+    the MERGE is read-only (apart from the idempotent step-0 reset)."""
     store = WatermarkStore(spark, state_dir)
 
     # --- Step 0: empty-target → reset watermark (I-2) -------------------------
@@ -100,8 +76,7 @@ def run_incremental(
         ).first()
     watermark_reset = n_target == 0
     if watermark_reset:
-        store.write(process_name, DEFAULT_WATERMARK_START)
-    _maybe_fail("after_reset")
+        store.write(ETL_PROCESS_NAME, DEFAULT_WATERMARK_START)
 
     # --- Steps 1-3a fused: ONE source pass (A-2 + I-3 + I-4) ------------------
     # The watermark is read BEFORE the probe, and the half-open delta window
@@ -114,7 +89,7 @@ def run_incremental(
     # never data-sized). The previous two-job form scanned the source twice.
     # When cur_max <= prev_wm no row passes the membership predicate, so the
     # count/sets degrade to 0/empty exactly as the old guarded branch did.
-    prev_wm = store.read(process_name)
+    prev_wm = store.read(ETL_PROCESS_NAME)
     wk = lambda c: F.date_trunc("week", c).cast("date")
     act = F.to_date(
         F.greatest("rental_date", F.coalesce("return_date", "rental_date"))
@@ -131,7 +106,6 @@ def run_incremental(
         ).alias("tw"),
     ).first()
     cur_max = probe.max_lu if probe.max_lu is not None else prev_wm
-    _maybe_fail("after_window")
 
     # --- Step 3a: affected weeks from changed rows (I-4, set-based O-10) -----
     if cur_max > prev_wm:
@@ -158,7 +132,7 @@ def run_incremental(
     if not affected:
         # an unchanged watermark is already on disk: rewriting it is pure cost
         if cur_max != prev_wm:
-            store.write(process_name, cur_max)
+            store.write(ETL_PROCESS_NAME, cur_max)
         return IncrementalRunReport(
             previous_watermark=prev_wm,
             new_watermark=cur_max,
@@ -176,7 +150,7 @@ def run_incremental(
     # global history"); with the O(n + weeks) one-plan summary this costs the
     # same and keeps incremental ≡ full recompute exactly.
     min_dirty = min(affected)
-    summary = weekly_rental_summary(rental, as_of=as_of)
+    summary = weekly_rental_summary(rental)
     updates = (
         summary.where(F.col("week_beginning") >= F.lit(min_dirty))
         .select(
@@ -195,12 +169,10 @@ def run_incremental(
         .localCheckpoint(eager=False)
     )
     n_weeks_written = updates.count()
-    _maybe_fail("before_merge")
     merge_upsert(spark, target_dir, updates, key=["week_beginning"])
-    _maybe_fail("before_watermark")
 
     # --- Step 5: advance watermark AFTER the summary commit (O-8) ------------
-    store.write(process_name, cur_max)
+    store.write(ETL_PROCESS_NAME, cur_max)
     return IncrementalRunReport(
         previous_watermark=prev_wm,
         new_watermark=cur_max,

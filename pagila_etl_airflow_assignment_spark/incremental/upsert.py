@@ -2,22 +2,19 @@
 
 The reference relies on Postgres ``INSERT ... ON CONFLICT DO UPDATE``
 (etl_script_incremental_pandas.py:249-267). Plain Parquet has no in-place
-upsert, so we implement the documented fallback (SURVEY.md §7 "What's hard"):
+upsert, so every merge takes the one documented fallback (SURVEY.md §7
+"What's hard"):
 
-    read target ∪ updates → keep the newest row per key → staged atomic swap
+    read target ∪ updates → the update row wins per key → staged atomic swap
 
-On a real lakehouse deployment this module is the seam where Delta Lake's
-``MERGE INTO`` (or Iceberg's) slots in — same call signature, true atomic
-commit, no full rewrite. For the summary table here the rewrite is trivially
-small (one row per week); the watermark table does not come through here at
-all, it is driver-committed metadata (watermark.py). For a large partitioned
-target, pass ``partition_by`` and only affected partitions are rewritten
-(dynamic-partition-overwrite shape), which is what scales to 100 TB: the
-rewrite cost is proportional to dirty partitions, not table size.
-
-The row count a merge returns comes from the footers of the files on disk
-after the commit (driver-side metadata reads, no Spark job), never from a
-re-scan of the table.
+The whole target is rewritten into one file per merge. For the summary table
+that is trivially small (one row per week); the watermark table does not come
+through here at all, it is driver-committed metadata (watermark.py). The
+commit is a local-filesystem rename, so tables must live on a local (or
+locally mounted) path: a URI such as ``s3a://...`` is rejected before any
+file is read or created. The row count a merge returns comes from the
+footers of the files on disk after the commit (driver-side metadata reads,
+no Spark job), never from a re-scan of the table.
 """
 
 from __future__ import annotations
@@ -25,66 +22,11 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from urllib.parse import urlsplit
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-
-def delta_available() -> bool:
-    """Feature-detect Delta Lake (not shipped in this container)."""
-    try:
-        from delta.tables import DeltaTable  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def merge_condition(key: list[str], target: str = "t", source: str = "u") -> str:
-    """The MERGE ON condition for ``DeltaTable.merge`` (pure, unit-testable
-    without delta installed)."""
-    return " AND ".join(f"{target}.{k} = {source}.{k}" for k in key)
-
-
-def _delta_merge(
-    spark: SparkSession,
-    target_dir: str,
-    updates: DataFrame,
-    key: list[str],
-    order_by: str | None,
-    partition_by: list[str] | None = None,
-) -> int:
-    """True transactional MERGE via Delta (reference etl.py:249-267
-    `ON CONFLICT DO UPDATE` parity: atomic commit, concurrent-writer-safe,
-    no table rewrite). Same signature/result as the parquet fallback."""
-    from delta.tables import DeltaTable
-
-    if not DeltaTable.isDeltaTable(spark, target_dir):
-        writer = updates.write.format("delta").mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.save(target_dir)
-    else:
-        merge = (
-            DeltaTable.forPath(spark, target_dir)
-            .alias("t")
-            .merge(updates.alias("u"), merge_condition(key))
-        )
-        if order_by:
-            merge = merge.whenMatchedUpdateAll(
-                condition=f"u.{order_by} >= t.{order_by}"
-            )
-        else:
-            merge = merge.whenMatchedUpdateAll()
-        merge.whenNotMatchedInsertAll().execute()
-    return spark.read.format("delta").load(target_dir).count()
-
-
-def _looks_like_delta(path: str) -> bool:
-    """A Delta table is a parquet dir with a `_delta_log/`; existing plain
-    parquet targets keep the fallback path even when delta is installed."""
-    return os.path.isdir(os.path.join(path, "_delta_log"))
 
 
 def _hidden(name: str) -> bool:
@@ -96,7 +38,16 @@ def _hidden(name: str) -> bool:
 
 def parquet_files(path: str) -> list[str]:
     """The data files of the parquet table at ``path`` (recursive, sorted;
-    empty when the directory is absent)."""
+    empty when the directory is absent).
+
+    Every table read, merge and watermark access lists its files here first,
+    so this is where a non-local path is refused: ``os.walk`` would find
+    nothing under a URI and the caller would treat the table as empty."""
+    if urlsplit(path).scheme:
+        raise ValueError(
+            f"{path!r}: tables are committed by local rename; "
+            "URI paths are not supported"
+        )
     found = []
     for root, dirs, files in os.walk(path):
         dirs[:] = [d for d in dirs if not _hidden(d)]
@@ -131,7 +82,7 @@ def read_parquet_table(
 
 def _atomic_swap(new_dir: str, target_dir: str) -> None:
     """Replace target_dir with new_dir via rename (POSIX-atomic enough for
-    local/driver-coordinated writes; object stores use Delta instead)."""
+    local/driver-coordinated writes)."""
     bak = f"{target_dir}.bak-{uuid.uuid4().hex[:8]}"
     if os.path.isdir(target_dir):
         os.rename(target_dir, bak)
@@ -141,74 +92,28 @@ def _atomic_swap(new_dir: str, target_dir: str) -> None:
 
 
 def merge_upsert(
-    spark: SparkSession,
-    target_dir: str,
-    updates: DataFrame,
-    key: list[str],
-    order_by: str | None = None,
-    partition_by: list[str] | None = None,
+    spark: SparkSession, target_dir: str, updates: DataFrame, key: list[str]
 ) -> int:
     """Upsert ``updates`` into the parquet table at ``target_dir`` keyed by
     ``key``: update rows win over existing rows with the same key.
 
-    ``order_by``: optional column whose larger value wins within a key
-    (defaults to a source-precedence flag — updates beat target).
-    Returns the post-merge row count, read from the committed files' footers.
-
-    Partitioned targets (``partition_by``) use TRUE dynamic-partition
-    overwrite: only partitions present in ``updates`` are read back, merged,
-    and rewritten — untouched partitions' files are never touched, so the
-    rewrite cost is proportional to dirty partitions, not table size (the
-    shape that scales to 100 TB). Unpartitioned targets use the read-merge-
-    atomic-swap fallback (trivially small for the weekly summary table).
-
-    When Delta Lake is on the classpath (feature-detected; not in this
-    container), the merge routes through ``DeltaTable.merge`` instead — the
-    real transactional seam matching the reference's Postgres ON CONFLICT.
-    """
-    if delta_available() and (
-        _looks_like_delta(target_dir) or not os.path.isdir(target_dir)
-    ):
-        return _delta_merge(spark, target_dir, updates, key, order_by, partition_by)
+    The merged table is written to a staging directory and swapped in
+    atomically; a missing target is created. Returns the post-merge row
+    count, read from the committed files' footers."""
     # the target holds earlier updates, so their schema is the target's:
     # passing it skips Spark's schema-inference job over the footers
     existing = read_parquet_table(spark, target_dir, schema=updates.schema)
-    if existing is not None and partition_by:
-        # restrict the merge universe to DIRTY partitions only; the distinct
-        # partition-value set is small by construction (it is the week list /
-        # process list), so the semi join broadcasts
-        dirty = updates.select(*partition_by).distinct()
-        existing = existing.join(F.broadcast(dirty), partition_by, "left_semi")
     tagged = updates.withColumn("__precedence", F.lit(1))
     if existing is not None:
         tagged = tagged.unionByName(
             existing.select(*updates.columns).withColumn("__precedence", F.lit(0))
         )
-    order_cols = [F.col("__precedence").desc()]
-    if order_by:
-        order_cols.insert(0, F.col(order_by).desc())
-    w = Window.partitionBy(*key).orderBy(*order_cols)
+    w = Window.partitionBy(*key).orderBy(F.col("__precedence").desc())
     merged = (
         tagged.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
         .drop("__rn", "__precedence")
     )
-
-    if partition_by:
-        if existing is None:
-            merged.repartition(*partition_by).write.partitionBy(
-                *partition_by
-            ).mode("overwrite").parquet(target_dir)
-        else:
-            # dynamic mode replaces ONLY the partitions present in `merged`
-            # (Spark's committer stages per-partition then renames); clean
-            # partitions are untouched on disk
-            merged.repartition(*partition_by).write.partitionBy(
-                *partition_by
-            ).option("partitionOverwriteMode", "dynamic").mode(
-                "overwrite"
-            ).parquet(target_dir)
-        return footer_row_count(target_dir)
 
     staging = f"{target_dir}.staging-{uuid.uuid4().hex[:8]}"
     merged.coalesce(1).write.mode("overwrite").parquet(staging)

@@ -7,15 +7,12 @@ revises it — appending would duplicate windows. ``foreachBatch`` +
 ``merge_upsert`` gives the upsert semantics the reference gets from Postgres
 ``ON CONFLICT`` (etl_script_incremental_pandas.py:249-267), per micro-batch:
 
-- each batch carries only CHANGED keys (update mode), so the merge cost is
-  proportional to revisions, not table size — same contract as the batch
-  incremental runner (SURVEY.md I-rows);
+- each batch carries only CHANGED keys (update mode) and the merge is the
+  same staged-swap MERGE the batch incremental runner uses (SURVEY.md
+  I-rows), so every batch commits by one atomic directory swap;
 - the merge is idempotent on the key, so a replayed batch (restart after a
   crash between sink-commit and checkpoint-commit) converges to the same
-  table — exactly-once EFFECT from at-least-once delivery;
-- when Delta is on the classpath the same call routes through
-  ``DeltaTable.merge`` (incremental/upsert.py), making the commit atomic
-  under concurrent readers.
+  table — exactly-once EFFECT from at-least-once delivery.
 """
 
 from __future__ import annotations

@@ -6,14 +6,20 @@ reference intended but never automated.
 (c) from-empty bootstrap   — empty target ⇒ watermark reset ⇒ full history
 (d) no-op run              — no changes ⇒ watermark advances, zero writes
 (e) crash safety           — crash between summary write and watermark ⇒ rerun converges
+
+Crashes are injected by monkeypatching the runner's module seams
+(``WatermarkStore.write``, ``runner.weekly_rental_summary``,
+``runner.merge_upsert``); the runner itself has no fault hooks.
 """
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import os
 import shutil
 import tempfile
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,6 +28,7 @@ from pagila_etl_airflow_assignment_spark.incremental import (
     DEFAULT_WATERMARK_START,
     WatermarkStore,
     run_incremental,
+    runner,
 )
 from pagila_etl_airflow_assignment_spark.incremental.runner import ETL_PROCESS_NAME
 from pagila_etl_airflow_assignment_spark.incremental.upsert import read_parquet_table
@@ -179,7 +186,42 @@ def test_noop_on_unchanged_snapshot_writes_nothing(spark, rental, dirs):
     assert store.read(ETL_PROCESS_NAME) == r4.new_watermark
 
 
-def test_crash_between_merge_and_watermark_converges(spark, rental, dirs):
+@contextlib.contextmanager
+def _crash_at(monkeypatch, point):
+    """Make the next run raise ``injected crash at <point>`` at that protocol
+    boundary, through the runner's existing module seams:
+
+    * ``after_reset``      — the step-0 watermark reset is written, then raises
+    * ``after_window``     — the window is read; the summary recompute raises
+    * ``before_merge``     — the updates are computed; the MERGE raises
+    * ``before_watermark`` — the MERGE commits, then raises (O-8 certificate)
+    """
+
+    def crash(*_args, **_kwargs):
+        raise RuntimeError(f"injected crash at {point}")
+
+    def then_crash(fn):
+        def wrapped(*args, **kwargs):
+            fn(*args, **kwargs)
+            crash()
+
+        return wrapped
+
+    with monkeypatch.context() as mp:
+        if point == "after_reset":
+            mp.setattr(WatermarkStore, "write", then_crash(WatermarkStore.write))
+        elif point == "after_window":
+            mp.setattr(runner, "weekly_rental_summary", crash)
+        elif point == "before_merge":
+            mp.setattr(runner, "merge_upsert", crash)
+        else:
+            assert point == "before_watermark", point
+            mp.setattr(runner, "merge_upsert", then_crash(runner.merge_upsert))
+        with pytest.raises(RuntimeError, match=f"injected crash at {point}"):
+            yield
+
+
+def test_crash_between_merge_and_watermark_converges(spark, rental, dirs, monkeypatch):
     """(e): crash after summary MERGE but before watermark advance; the rerun
     reprocesses the same half-open window and converges (O-8 ordering)."""
     target_dir, state_dir = dirs
@@ -187,10 +229,8 @@ def test_crash_between_merge_and_watermark_converges(spark, rental, dirs):
     run_incremental(spark, base, target_dir, state_dir)
 
     grown = rental.where(F.col("last_update") <= F.lit(dt.datetime(1998, 1, 1)))
-    with pytest.raises(RuntimeError, match="injected crash"):
-        run_incremental(
-            spark, grown, target_dir, state_dir, fail_before_watermark=True
-        )
+    with _crash_at(monkeypatch, "before_watermark"):
+        run_incremental(spark, grown, target_dir, state_dir)
     # watermark must NOT have advanced
     store = WatermarkStore(spark, state_dir)
     wm = store.read("pagila_weekly_rental_summary")
@@ -199,9 +239,6 @@ def test_crash_between_merge_and_watermark_converges(spark, rental, dirs):
     report = run_incremental(spark, grown, target_dir, state_dir)
     assert not report.noop  # the window was reprocessed
     assert _target_rows(spark, target_dir) == _full_recompute_rows(grown)
-
-
-FAIL_POINTS = ("after_reset", "after_window", "before_merge", "before_watermark")
 
 
 @pytest.mark.parametrize(
@@ -215,7 +252,7 @@ FAIL_POINTS = ("after_reset", "after_window", "before_merge", "before_watermark"
     ],
     ids=["reset", "window", "merge", "double", "every-step"],
 )
-def test_crash_at_any_boundary_converges(spark, rental, dirs, schedule):
+def test_crash_at_any_boundary_converges(spark, rental, dirs, schedule, monkeypatch):
     """(e) generalized: crash the protocol at ANY named boundary, at any step
     of a 4-batch growth sequence (including repeated faults), then rerun —
     the target must equal the full recompute of the current snapshot after
@@ -233,10 +270,8 @@ def test_crash_at_any_boundary_converges(spark, rental, dirs, schedule):
         snapshot = rental.where(F.col("last_update") <= F.lit(cut))
         point = schedule.get(step)
         if point is not None:
-            with pytest.raises(RuntimeError, match=f"injected crash at {point}"):
-                run_incremental(
-                    spark, snapshot, target_dir, state_dir, fail_point=point
-                )
+            with _crash_at(monkeypatch, point):
+                run_incremental(spark, snapshot, target_dir, state_dir)
         run_incremental(spark, snapshot, target_dir, state_dir)
         assert _target_rows(spark, target_dir) == _full_recompute_rows(snapshot), (
             f"divergence after crash at {point!r} in step {step}"
@@ -245,6 +280,48 @@ def test_crash_at_any_boundary_converges(spark, rental, dirs, schedule):
     final = run_incremental(spark, rental.where(F.col("last_update") <= F.lit(cuts[-1])),
                             target_dir, state_dir)
     assert final.noop
+
+
+def _parquet_bytes(*dirs):
+    """Every parquet file under ``dirs`` with its contents."""
+    return {
+        os.path.join(root, f): Path(root, f).read_bytes()
+        for d in dirs
+        for root, _, fs in os.walk(d)
+        for f in fs
+        if f.endswith(".parquet")
+    }
+
+
+@pytest.mark.parametrize("point", ["after_window", "before_merge"])
+def test_pre_merge_crash_is_read_only(spark, rental, dirs, monkeypatch, point):
+    """Every step before the MERGE is read-only on a non-empty target: a
+    crash there leaves the target's and the state's parquet files
+    byte-for-byte as they were."""
+    target_dir, state_dir = dirs
+    base = rental.where(F.col("last_update") <= F.lit(dt.datetime(1996, 1, 1)))
+    run_incremental(spark, base, target_dir, state_dir)
+    before = _parquet_bytes(target_dir, state_dir)
+    assert before
+
+    grown = rental.where(F.col("last_update") <= F.lit(dt.datetime(1998, 1, 1)))
+    with _crash_at(monkeypatch, point):
+        run_incremental(spark, grown, target_dir, state_dir)
+    assert _parquet_bytes(target_dir, state_dir) == before
+
+
+def test_dag_callable_runs_the_cli_job(monkeypatch):
+    """The Airflow callable is the CLI job with the env-derived dirs."""
+    from pagila_etl_airflow_assignment_spark.airflow_dags import weekly_summary_dag
+    from pagila_etl_airflow_assignment_spark.jobs import weekly_summary
+
+    calls = []
+    monkeypatch.setattr(weekly_summary, "main", calls.append)
+    monkeypatch.setenv("PAGILA_SOURCE_DIR", "/src")
+    monkeypatch.setenv("PAGILA_TARGET_DIR", "/tgt")
+    monkeypatch.setenv("PAGILA_STATE_DIR", "/st")
+    weekly_summary_dag._run()
+    assert calls == [["--source", "/src", "--target", "/tgt", "--state", "/st"]]
 
 
 def test_watermark_store_default_and_roundtrip(spark, dirs):

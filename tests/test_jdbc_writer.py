@@ -1,14 +1,10 @@
-"""SQL-generation-level tests for the JDBC writer twin and the Delta seam
-(neither Postgres nor Delta is installable here; the statement TEXT is the
-testable surface — column quoting must match the reference's
-etl_script_incremental_pandas.py:250-259 exactly)."""
+"""SQL-generation-level tests for the JDBC writer twin (Postgres is not
+installable here; the statement TEXT is the testable surface — column
+quoting must match the reference's etl_script_incremental_pandas.py:250-259
+exactly)."""
 
 from __future__ import annotations
 
-from pagila_etl_airflow_assignment_spark.incremental.upsert import (
-    delta_available,
-    merge_condition,
-)
 from pagila_etl_airflow_assignment_spark.sources.jdbc import (
     SUMMARY_COLUMNS,
     quote_ident,
@@ -46,19 +42,6 @@ def test_upsert_statement_matches_reference_shape():
 def test_upsert_statement_parameter_count():
     sql = upsert_statement()
     assert sql.count("%s") == len(SUMMARY_COLUMNS)
-
-
-def test_merge_condition():
-    assert merge_condition(["week_beginning"]) == "t.week_beginning = u.week_beginning"
-    assert (
-        merge_condition(["a", "b"], target="tgt", source="src")
-        == "tgt.a = src.a AND tgt.b = src.b"
-    )
-
-
-def test_delta_not_available_in_container():
-    # the seam must feature-detect cleanly (fallback path is what tests cover)
-    assert delta_available() is False
 
 
 # --- JDBC delta-read contract (round 10) -----------------------------------------------
